@@ -1,6 +1,6 @@
 package graft.canon
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Cross-document entity canonicalization (SURVEY §2.3 J10 — the north rule's
@@ -147,28 +147,35 @@ object Canonicalize {
       .select($"id", coalesce($"component", $"id").as("component"))
   }
 
-  /** Canonicalize node keys: same-content merge (exact, the reference's
-    * md5(lower(content)) identity) extended with an alias dictionary
-    * (alias → canonical) — the edges of the equivalence graph are
-    * (key, aliasTarget) pairs; connected components assign one canonical id
-    * per cluster. Alias dict is broadcast (small dimension, J5 pattern).
+  /** Adds `canonical_key` = coalesce(alias component of `key`, `key`): the
+    * same-content merge (exact, the reference's md5(lower(content))
+    * identity) extended with an alias dictionary whose connected components
+    * assign one canonical key per cluster. Only endpoints of the
+    * lower-cased alias graph can map to another key, so with no aliases
+    * there is no join, and otherwise the joined side is the component map
+    * — sized by the alias dictionary, not the entity vocabulary — and AQE
+    * picks the join strategy from its runtime size.
+    *
+    * @param key column of `df` to canonicalize (e.g. lower(content)); rows
+    *   with a NULL key get a NULL canonical key
+    * @param aliases DataFrame (alias, canonical) — may be empty
+    */
+  def withCanonicalKey(spark: SparkSession, df: DataFrame, key: Column,
+                       aliases: Option[DataFrame]): DataFrame = aliases match {
+    case None => df.withColumn("canonical_key", key)
+    case Some(al) =>
+      val comps = connectedComponents(spark,
+        al.select(lower(col("alias")).as("src"), lower(col("canonical")).as("dst")))
+      df.join(comps, key === comps("id"), "left")
+        .select(df.columns.map(df(_)) :+ coalesce(comps("component"), key).as("canonical_key"): _*)
+  }
+
+  /** Canonical key of each distinct lower-cased node key.
     *
     * @param nodeKeys DataFrame with column `key` (e.g. lower(content))
     * @param aliases  DataFrame (alias, canonical) — may be empty
     * @return DataFrame (key, canonical_key)
     */
-  def canonicalKeys(spark: SparkSession, nodeKeys: DataFrame, aliases: DataFrame): DataFrame = {
-    import spark.implicits._
-    val keys = nodeKeys.select(lower($"key").as("key")).distinct()
-    val edgePairs = aliases
-      .select(lower($"alias").as("src"), lower($"canonical").as("dst"))
-      .where($"src" =!= $"dst")
-    if (edgePairs.isEmpty) return keys.select($"key", $"key".as("canonical_key"))
-
-    val comps = connectedComponents(spark, edgePairs)
-    keys.join(broadcastIfSmall(comps), keys("key") === comps("id"), "left")
-      .select($"key", coalesce($"component", $"key").as("canonical_key"))
-  }
-
-  private def broadcastIfSmall(df: DataFrame): DataFrame = df // let AQE decide; hook for hints
+  def canonicalKeys(spark: SparkSession, nodeKeys: DataFrame, aliases: DataFrame): DataFrame =
+    withCanonicalKey(spark, nodeKeys.select(lower(col("key")).as("key")).distinct(), col("key"), Some(aliases))
 }

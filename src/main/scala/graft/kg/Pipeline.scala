@@ -5,43 +5,58 @@ import graft.canon.Canonicalize
 import graft.model._
 import graft.needs.Needs
 import graft.text.PyText
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end KG-construction pipeline (SURVEY §3.1 Spark equivalent).
   *
-  * pages → [extract → analyze → needs → graph-build]  (ONE fused narrow
-  * stage: per-document transforms are pure functions inside a single typed
-  * map — zero shuffles until canonicalization/write, mirroring the
-  * reference's embarrassingly-parallel per-document Lambda model)
-  * → explode nodes/edges → cross-document canonicalization (the only
-  * iterative wide op) → nodes/edges/triples tables + per-partition
-  * lineage/metrics.
+  * pages → [extract → analyze → needs → graph-build] (ONE fused narrow
+  * stage: per-document transforms are pure functions inside a single
+  * mapPartitions, mirroring the reference's embarrassingly-parallel
+  * per-document Lambda model) → one cached row per page holding only the
+  * columns the tables write → nodes/edges/triples/metrics/lineage tables
+  * as column expressions over that cache, each append scanning only its
+  * own columns.
+  *
+  * Canonicalization joins the nodes against the alias components only
+  * (connected components of the alias dictionary): a key outside the
+  * alias graph is its own canonical key, so with no aliases there is no
+  * join at all, and with aliases the joined side is sized by the alias
+  * dictionary — AQE picks broadcast or shuffle from its runtime size. A
+  * run into a directory without aliases or KB is six Spark jobs: one per
+  * append, plus the metrics aggregate's shuffle stage; the first append
+  * fills the cache.
+  *
+  * Contract: node `content` is never NULL (the builders copy it from the
+  * entity text, a non-null string), so every node row gets a non-NULL
+  * canonical_id.
   *
   * At 100 TB: the narrow stage scales linearly with input splits (no data
-  * exchanged); canonicalization shuffles only the distinct (content-key)
-  * set — orders of magnitude smaller than the corpus; writes are partitioned
-  * by customer-id bucket so downstream per-customer queries prune.
+  * exchanged); the only wide ops are the per-partition metrics aggregate
+  * and connected components over the alias dictionary; writes are
+  * partitioned so downstream per-type queries prune.
   */
 object Pipeline {
 
-  final case class PartitionMetric(
-      run_id: String,
-      stage: String,
-      partition_id: Int,
-      docs_processed: Long,
-      nodes_emitted: Long,
-      edges_emitted: Long,
-      triples_emitted: Long,
-      duration_ms: Long)
+  /** The `nodes` table's per-node columns. */
+  final case class NodeCols(node_id: String, content: String, node_type: String, confidence: Double,
+                            source_file: String, temporal_index: String, temporal_category: String)
 
-  final case class LineageRow(run_id: String, partition_id: Int, url: String, status: String)
+  /** The `edges` table's per-edge columns. */
+  final case class EdgeCols(edge_id: String, source_node_id: String, target_node_id: String,
+                            relationship_type: String, weight: Double, evidence: Seq[String],
+                            reasoning: String, temporal_index: String, temporal_category: String)
 
-  /** One mention row per extracted raw entity (feeds optional entity linking). */
-  final case class MentionRow(url: String, idx: Int, surface: String, entity_type: String, context: String)
+  /** One mention per extracted raw entity (feeds optional entity linking). */
+  final case class Mention(surface: String, entity_type: String, context: String)
 
-  /** Per-doc output: the graph plus the doc's mentions (for the link stage). */
-  final case class DocOut(graph: DocGraph, mentions: Seq[MentionRow])
+  /** One page's output as cached by `run`: what the tables write, and no
+    * more. `build_ms` is the page's analyze→build time, floored to ms;
+    * `mentions` is empty unless entity linking was asked for.
+    */
+  final case class DocRow(url: String, customer_id: String, partition_id: Int, build_ms: Long,
+                          nodes: Seq[NodeCols], edges: Seq[EdgeCols], triples: Seq[Triple],
+                          mentions: Seq[Mention])
 
   /** The fused per-document transform — SURVEY §3.2's pure function.
     * `v1 = true` opts into the v1-builder extensions (J7 co-occurrence
@@ -49,57 +64,57 @@ object Pipeline {
     * §2.9 pluggable enrichment seam (no-op default).
     */
   def buildDoc(p: Page, v1: Boolean = false, enricher: Enricher = NoopEnricher,
-               temporalIndex: String = ""): DocGraph = {
-    val doc = DocAnalyze.analyze(p)
+               temporalIndex: String = ""): DocGraph =
+    buildGraph(DocAnalyze.analyze(p), v1, enricher, temporalIndex)
+
+  private def buildGraph(doc: DocAnalysis, v1: Boolean, enricher: Enricher,
+                         temporalIndex: String): DocGraph = {
     val needs = Needs.profile(doc)
     if (v1) GraphBuildV1.buildV1(doc, needs, temporalIndex)
     else GraphBuild.build(doc, needs, enricher)
   }
 
-  /** pages → Dataset[DocGraph] with per-partition metrics + lineage capture.
-    * mapPartitions keeps the whole per-doc pipeline in one task; metric rows
-    * ride on accumulators-free side channel (emitted as data, north rule's
-    * per-partition metrics table).
-    */
+  /** pages → Dataset[DocGraph]: the whole per-doc pipeline in one task. */
   def docGraphs(spark: SparkSession, pages: Dataset[Page], v1: Boolean = false,
                 temporalIndex: String = ""): Dataset[DocGraph] = {
     import spark.implicits._
     pages.mapPartitions(_.map(p => buildDoc(p, v1, NoopEnricher, temporalIndex)))
   }
 
-  /** Variant keeping the NER mentions (context = leading 400 chars). */
-  def buildDocOut(p: Page, v1: Boolean = false, enricher: Enricher = NoopEnricher,
-                  temporalIndex: String = ""): DocOut = {
+  /** One page → its table row; mentions (context = leading 400 chars of
+    * the text) only when `withMentions`.
+    */
+  private def docRow(p: Page, partitionId: Int, v1: Boolean, enricher: Enricher,
+                     temporalIndex: String, withMentions: Boolean): DocRow = {
+    val t0 = System.nanoTime()
     val doc = DocAnalyze.analyze(p)
-    val needs = Needs.profile(doc)
-    val g = if (v1) GraphBuildV1.buildV1(doc, needs, temporalIndex)
-            else GraphBuild.build(doc, needs, enricher)
-    val ctx = doc.text.take(400)
-    DocOut(g, doc.entities.zipWithIndex.map { case (e, i) =>
-      MentionRow(doc.url, i, e.text, e.entityType, ctx)
-    })
+    val g = buildGraph(doc, v1, enricher, temporalIndex)
+    val buildMs = (System.nanoTime() - t0) / 1000000L
+    val mentions =
+      if (!withMentions) Nil
+      else { val ctx = doc.text.take(400); doc.entities.map(e => Mention(e.text, e.entityType, ctx)) }
+    DocRow(g.url, g.customerId, partitionId, buildMs,
+      g.nodes.map(n => NodeCols(n.id, n.content, n.nodeType, n.confidence, n.source,
+        n.temporalIndex, n.temporalCategory)),
+      g.edges.map(e => EdgeCols(e.id, e.srcId, e.dstId, e.edgeType, e.confidence, e.evidence,
+        e.reasoning, e.temporalIndex, e.temporalCategory)),
+      GraphBuild.triples(g), mentions)
   }
 
-  /** Same, plus partition id and per-doc build nanos so lineage and metrics
-    * (incl. durations, north rule) derive without a second input pass.
-    * The enricher's open()/close() bracket each partition (warm-container
+  /** pages → one DocRow per page, stamped with its partition id. The
+    * enricher's open()/close() bracket each partition (warm-container
     * analog: one model/client init per task, not per document).
     */
-  def docGraphsWithPartition(spark: SparkSession, pages: Dataset[Page],
-                             v1: Boolean = false,
-                             enricher: Enricher = NoopEnricher,
-                             temporalIndex: String = ""): Dataset[(DocOut, Int, Long)] = {
+  def docRows(spark: SparkSession, pages: Dataset[Page], v1: Boolean = false,
+              enricher: Enricher = NoopEnricher, temporalIndex: String = "",
+              withMentions: Boolean = false): Dataset[DocRow] = {
     import spark.implicits._
     pages.mapPartitions { it =>
       val tc = org.apache.spark.TaskContext.get()
       val pid = if (tc == null) 0 else tc.partitionId()
       enricher.open()
       if (tc != null) tc.addTaskCompletionListener[Unit](_ => enricher.close())
-      it.map { p =>
-        val t0 = System.nanoTime()
-        val out = buildDocOut(p, v1, enricher, temporalIndex)
-        (out, pid, System.nanoTime() - t0)
-      }
+      it.map(p => docRow(p, pid, v1, enricher, temporalIndex, withMentions))
     }
   }
 
@@ -148,78 +163,44 @@ object Pipeline {
     // (reference stamps each object's creation time; F18 makes timestamps
     // write-time-only and parity-excluded, so run start is the stamp)
     val temporalIndex = if (v1) java.time.Instant.now().toString else ""
-    val graphs = docGraphsWithPartition(spark, todo, v1, enricher, temporalIndex)
+    val rows = docRows(spark, todo, v1, enricher, temporalIndex, withMentions = kb.isDefined).toDF()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val runCol = lit(runId).as("run_id")
 
     // ---- flat node/edge/triple tables (narrow explodes)
-    val nodeRows = graphs.flatMap { case (o, _, _) =>
-      val g = o.graph
-      g.nodes.map(n => (g.customerId, g.url, n.id, n.content, n.nodeType, n.confidence, n.source,
-        n.temporalIndex, n.temporalCategory))
-    }.toDF("customer_id", "url", "node_id", "content", "node_type", "confidence", "source_file",
-      "temporal_index", "temporal_category")
-      .withColumn("run_id", lit(runId))
-
-    val edgeRows = graphs.flatMap { case (o, _, _) =>
-      val g = o.graph
-      g.edges.map(e => (g.customerId, g.url, e.id, e.srcId, e.dstId, e.edgeType, e.confidence,
-        e.evidence, e.reasoning, e.temporalIndex, e.temporalCategory))
-    }.toDF("customer_id", "url", "edge_id", "source_node_id", "target_node_id",
-      "relationship_type", "weight", "evidence", "reasoning",
-      "temporal_index", "temporal_category")
-      .withColumn("run_id", lit(runId))
-
-    val tripleRows = graphs.flatMap { case (o, _, _) => GraphBuild.triples(o.graph) }.toDF()
-      .withColumn("run_id", lit(runId))
+    def perDoc(arr: String): DataFrame =
+      rows.select($"customer_id", $"url", explode(col(arr)).as("x"))
+        .select($"customer_id", $"url", $"x.*", runCol)
+    val nodeRows = perDoc("nodes")
+    val edgeRows = perDoc("edges")
+    val tripleRows = rows.select(explode($"triples").as("t")).select($"t.*", runCol)
 
     // ---- canonicalization (J10): merge same-key entities across documents;
     // alias dictionary optional. Canonical id = persisted sha256 id of the
     // canonical key (graph_extraction_agent.py:510-519 pattern).
-    val keyed = nodeRows.withColumn("key", lower($"content"))
-    // localCheckpoint: the canonical map feeds BOTH the broadcast-size count
-    // and the join build side — materialize the distinct pass once instead
-    // of re-running it per consumer
-    val canon = (aliases match {
-      case Some(al) if !al.isEmpty =>
-        Canonicalize.canonicalKeys(spark, keyed.select($"key"), al)
-      case _ => keyed.select($"key").distinct().select($"key", $"key".as("canonical_key"))
-    }).localCheckpoint()
-    // Hub-key skew (e.g. one org in a third of all docs): the canonical map
-    // is keyed on DISTINCT entity keys — vocabulary-sized, orders of
-    // magnitude below the corpus — so broadcast it whenever it fits; the
-    // node side then never shuffles and per-key skew is moot. Past the
-    // limit (override: spark conf graft.canon.broadcastMaxKeys) fall back
-    // to the shuffle join, where AQE's skew-join splitting (enabled in all
-    // entry points) handles the hub keys.
-    val broadcastMaxKeys =
-      spark.conf.getOption("graft.canon.broadcastMaxKeys").map(_.toLong).getOrElse(2000000L)
-    val canonSide = if (canon.count() <= broadcastMaxKeys) broadcast(canon) else canon
-    val canonNodes = keyed.join(canonSide, Seq("key"))
-      .withColumn("canonical_id",
-        concat(lit("canon_"), substring(sha2($"canonical_key", 256), 1, 16)))
-      .drop("key", "canonical_key")
+    val canonNodes = Canonicalize.withCanonicalKey(spark, nodeRows, lower($"content"), aliases)
+      .withColumn("canonical_id", concat(lit("canon_"), substring(sha2($"canonical_key", 256), 1, 16)))
+      .drop("canonical_key")
 
     // ---- per-partition metrics + lineage (north rule: docs processed,
-    // triples emitted, durations — and link-score distribution below)
-    val metrics = graphs.map { case (o, pid, nanos) =>
-      val g = o.graph
-      PartitionMetric(runId, "graph_build", pid, 1L, g.nodes.size.toLong,
-        g.edges.size.toLong, g.edges.size.toLong, nanos / 1000000L)
-    }.groupBy($"run_id", $"stage", $"partition_id")
-      .agg(sum($"docs_processed").as("docs_processed"),
-        sum($"nodes_emitted").as("nodes_emitted"),
-        sum($"edges_emitted").as("edges_emitted"),
-        sum($"triples_emitted").as("triples_emitted"),
-        sum($"duration_ms").as("duration_ms"))
+    // triples emitted — one per edge — and durations; link-score
+    // distribution below)
+    val edgesEmitted = sum(size($"edges"))
+    val metrics = rows.groupBy($"partition_id")
+      .agg(count(lit(1)).as("docs_processed"), sum(size($"nodes")).as("nodes_emitted"),
+        edgesEmitted.as("edges_emitted"), edgesEmitted.as("triples_emitted"),
+        sum($"build_ms").as("duration_ms"))
+      .select(runCol, lit("graph_build").as("stage"), $"partition_id", $"docs_processed",
+        $"nodes_emitted", $"edges_emitted", $"triples_emitted", $"duration_ms")
 
-    val lineage = graphs.map { case (o, pid, _) => LineageRow(runId, pid, o.graph.url, "done") }.toDF()
+    val lineage = rows.select(runCol, $"partition_id", $"url", lit("done").as("status"))
 
     // ---- optional entity-linking stage: alias-KB broadcast join + context
     // scoring; per-partition link-score histogram (north-rule metric)
     val linkMetrics = kb.map { kbDf =>
-      val mentionRows = graphs.flatMap { case (o, pid, _) =>
-        o.mentions.map(m => (s"${m.url}#${m.idx}", m.url, m.surface, m.entity_type, m.context, pid))
-      }.toDF("mention_id", "url", "surface", "entity_type", "context", "partition_id")
+      val mentionRows = rows.select($"url", $"partition_id", posexplode($"mentions"))
+        .select(concat($"url", lit("#"), $"pos".cast("string")).as("mention_id"), $"url",
+          $"col.surface", $"col.entity_type", $"col.context", $"partition_id")
       val linked = graft.link.EntityLink.link(mentionRows, kbDf)
       linked.groupBy($"partition_id",
         when($"link_score".isNull, lit("unlinked"))
@@ -239,7 +220,7 @@ object Pipeline {
       linkMetrics.foreach(tio.append(_, "link_metrics"))
       tio.commit(runId)
     }
-    graphs.unpersist()
+    rows.unpersist()
     RunResult(canonNodes, edgeRows, tripleRows, metrics, lineage, linkMetrics)
   }
 

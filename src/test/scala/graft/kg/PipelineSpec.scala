@@ -85,48 +85,108 @@ class PipelineSpec extends SparkSpec {
   test("enrichment seam (§2.9): no-op default is identity; a plugged enricher adds entities pre-dedup") {
     import spark.implicits._
     val pages = Corpus.pages(spark, 40, partitions = 2)
-    def triplesOf(g: org.apache.spark.sql.Dataset[graft.model.DocGraph]) =
-      g.flatMap(GraphBuild.triples(_)).collect()
-        .map(t => (t.url, t.subj, t.pred, t.obj, t.confidence)).sorted.toSeq
+    def sorted(ts: org.apache.spark.sql.Dataset[graft.model.Triple]) =
+      ts.collect().map(t => (t.url, t.subj, t.pred, t.obj, t.confidence)).sorted.toSeq
 
     // 1. explicit NoopEnricher ≡ the enricher-less path, byte-for-byte
-    val base = triplesOf(Pipeline.docGraphs(spark, pages))
-    val noop = triplesOf(
-      Pipeline.docGraphsWithPartition(spark, pages, v1 = false, enricher = NoopEnricher)
-        .map(_._1.graph))
+    val base = sorted(Pipeline.docGraphs(spark, pages).flatMap(GraphBuild.triples(_)))
+    val noop = sorted(Pipeline.docRows(spark, pages, enricher = NoopEnricher).flatMap(_.triples))
     assert(noop == base)
 
-    // 2. a real enricher: per-partition open() counted, entities added BEFORE
+    // 2. a real enricher: one open() per partition, entities added BEFORE
     // dedup (an enriched duplicate of an existing entity must NOT double)
     CountingEnricher.opened.set(0)
-    val enriched = Pipeline.docGraphsWithPartition(spark, pages, v1 = false, enricher = CountingEnricher)
-      .map(_._1.graph).collect()
-    assert(CountingEnricher.opened.get() >= 1)
+    val enriched = Pipeline.docRows(spark, pages, enricher = CountingEnricher).collect()
+    assert(CountingEnricher.opened.get() == 2)
     assert(enriched.forall(_.nodes.count(_.content.equalsIgnoreCase("enriched topic")) == 1))
     assert(enriched.forall(_.nodes.exists(n =>
       n.content == "Enriched Topic" && n.confidence == 0.9)))
   }
 
-  test("nodes⋈canon join broadcasts the distinct-key map (hub-skew shape); fallback works") {
-    val pages = Corpus.pages(spark, 80, partitions = 4) // ~1/3 of interview docs carry the hub org
-    // disable the optimizer's size-based auto-broadcast so the assertion
-    // proves OUR explicit hint, not a small-table accident
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val res = Pipeline.run(spark, pages, "bc", "")
-      val plan = res.nodes.queryExecution.executedPlan.toString
-      assert(plan.contains("BroadcastHashJoin"),
-        s"canon map should broadcast (node side must not shuffle):\n$plan")
-      // force the fallback: broadcast cap 0 → shuffle join (AQE skew-split territory)
-      spark.conf.set("graft.canon.broadcastMaxKeys", "0")
-      val res2 = Pipeline.run(spark, pages, "bc2", "")
-      val plan2 = res2.nodes.queryExecution.executedPlan.toString
-      assert(!plan2.contains("BroadcastHashJoin"))
-      assert(res2.nodes.count() == res.nodes.count())
-    } finally {
-      spark.conf.unset("graft.canon.broadcastMaxKeys")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  test("no-alias run is at most six jobs with no join; alias join side is sized by the aliases") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.GraftTestBridge
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    import org.apache.spark.sql.functions.{array, explode, lower}
+    def topJoin(p: LogicalPlan) = p.collectFirst { case j: Join => j }
+    val pages = Corpus.pages(spark, 80, partitions = 4)
+    val dir = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
     }
+    GraftTestBridge.drainListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val res = try {
+      val r = Pipeline.run(spark, pages, "jobs", dir)
+      GraftTestBridge.drainListeners(spark)
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get() <= 6, s"${jobs.get()} jobs")
+    assert(topJoin(res.nodes.queryExecution.optimizedPlan).isEmpty,
+      res.nodes.queryExecution.optimizedPlan.toString)
+
+    val aliases = Seq(("Intel", "Intel Corporation"), ("INTEL", "intel corp"), ("Growth", "growth"))
+      .toDF("alias", "canonical")
+    val endpoints = aliases.select(explode(array(lower($"alias"), lower($"canonical"))))
+      .distinct().count()
+    val withAliases = Pipeline.run(spark, pages, "jobs-alias", "", aliases = Some(aliases))
+    val join = topJoin(withAliases.nodes.queryExecution.optimizedPlan)
+    assert(join.nonEmpty)
+    assert(GraftTestBridge.rowCount(spark, join.get.right) <= endpoints)
+    assert(withAliases.nodes.count() == res.nodes.count())
+  }
+
+  test("a no-alias run leaves no persisted RDD behind") {
+    val sc = spark.sparkContext
+    // compare ids, not counts: the context cleaner may free an earlier
+    // suite's garbage-collected RDD while the run is in flight
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val dir = java.nio.file.Files.createTempDirectory("graft-persist").toString
+    Pipeline.run(spark, Corpus.pages(spark, 40, partitions = 2), "persist", dir)
+    val added = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(added.isEmpty, added.flatMap(sc.getPersistentRDDs.get).mkString(", "))
+  }
+
+  test("table and RunResult schemas: names, order and types") {
+    import spark.implicits._
+    def cols(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.schema.fields.toSeq.map(f => s"${f.name}:${f.dataType.simpleString}")
+    val nodes = Seq("customer_id:string", "url:string", "node_id:string", "content:string",
+      "node_type:string", "confidence:double", "source_file:string", "temporal_index:string",
+      "temporal_category:string", "run_id:string", "canonical_id:string")
+    val edges = Seq("customer_id:string", "url:string", "edge_id:string", "source_node_id:string",
+      "target_node_id:string", "relationship_type:string", "weight:double", "evidence:array<string>",
+      "reasoning:string", "temporal_index:string", "temporal_category:string", "run_id:string")
+    val triples = Seq("customer_id:string", "url:string", "subj:string", "pred:string", "obj:string",
+      "confidence:double", "evidence:array<string>", "run_id:string")
+    val metrics = Seq("run_id:string", "stage:string", "partition_id:int", "docs_processed:bigint",
+      "nodes_emitted:bigint", "edges_emitted:bigint", "triples_emitted:bigint", "duration_ms:bigint")
+    val lineage = Seq("run_id:string", "partition_id:int", "url:string", "status:string")
+    val linkMetrics = Seq("partition_id:int", "score_bucket:string", "n:bigint", "run_id:string")
+
+    val kb = Seq(("KB1", "Intel Corporation", Seq("Intel"), "chips manufacturing technology", 0.9))
+      .toDF("entity_id", "canonical_name", "aliases", "profile", "prior")
+    val dir = java.nio.file.Files.createTempDirectory("graft-schema").toString
+    val res = Pipeline.run(spark, Corpus.pages(spark, 20, partitions = 2), "schema", dir, kb = Some(kb))
+    assert(cols(res.nodes) == nodes)
+    assert(cols(res.edges) == edges)
+    assert(cols(res.triples) == triples)
+    assert(cols(res.metrics) == metrics)
+    assert(cols(res.lineage) == lineage)
+    assert(cols(res.linkMetrics.get) == linkMetrics)
+
+    // committed tables read back the same, except that the nodes partition
+    // column (node_type) comes last
+    val tio = new graft.io.ParquetTableIO(dir)
+    assert(cols(tio.read(spark, "nodes")) == nodes.filterNot(_ == "node_type:string") :+ "node_type:string")
+    assert(cols(tio.read(spark, "edges")) == edges)
+    assert(cols(tio.read(spark, "triples")) == triples)
+    assert(cols(tio.read(spark, "metrics")) == metrics)
+    assert(cols(tio.read(spark, "lineage")) == lineage)
+    assert(cols(tio.read(spark, "link_metrics")) == linkMetrics)
   }
 
   test("metrics rows account for every processed doc") {
