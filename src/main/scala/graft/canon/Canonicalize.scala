@@ -1,5 +1,6 @@
 package graft.canon
 
+import graft.graph.Snapshot
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,7 +11,7 @@ import org.apache.spark.sql.functions._
   *
   * Implementation: alternating large-star / small-star rounds (Kiveris et
   * al., "Connected Components in MapReduce and Beyond") as a driver loop of
-  * plain DataFrame join+groupBy/min steps with `localCheckpoint()` per round
+  * plain DataFrame join+groupBy/min steps with one [[Snapshot]] per round
   * to truncate lineage. Converges in O(log n) rounds regardless of graph
   * DIAMETER — the hash-min label propagation it replaces needed O(diameter)
   * rounds, so a 1000-hop alias chain (entity A aka B aka C …) blew past any
@@ -53,20 +54,7 @@ object Canonicalize {
       .select(col(srcCol).cast("string").as("a"), col(dstCol).cast("string").as("b"))
       .where($"a" =!= $"b")
 
-    // localCheckpoint persists its RDD in the block manager and Dataset has
-    // no handle to unpersist it; track the ids each checkpoint adds so the
-    // superseded snapshot can be freed — otherwise the loop retains
-    // O(iterations) cached edge tables (real memory at 10⁹ entities).
-    val sc = spark.sparkContext
-    def checkpointTracked(df: DataFrame, eager: Boolean = true): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val out = df.localCheckpoint(eager)
-      (out, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    def free(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-
-    var (cur, curIds) = checkpointTracked(
+    var cur = Snapshot.take(
       e0.select(greatest($"a", $"b").as("u"), least($"a", $"b").as("v")).distinct())
 
     /** Cheap convergence fingerprint: (edge count, XOR of per-edge xxhash64)
@@ -113,7 +101,7 @@ object Canonicalize {
         .select($"v".as("u"), $"m".as("v"))
         .union(mins2.select($"u", $"m".as("v")))
         .distinct()
-      val (next, nextIds) = checkpointTracked(ss, eager = false)
+      val next = Snapshot.take(ss, eager = false)
       val fp = fingerprint(next) // ONE job: materializes the lazy snapshot en route
       // fingerprint equality is necessary-but-probabilistic (a ~2⁻⁶⁴ XOR
       // collision would otherwise silently freeze WRONG labels); confirm
@@ -122,9 +110,8 @@ object Canonicalize {
       // fingerprint-equal rounds (normally exactly once, at convergence)
       converged = fp == prevFp && next.except(cur).isEmpty
       prevFp = fp
-      free(curIds)
+      Snapshot.free(cur)
       cur = next
-      curIds = nextIds
       iter += 1
     }
     if (!converged && iter >= maxIter)

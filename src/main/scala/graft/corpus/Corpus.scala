@@ -1,6 +1,7 @@
 package graft.corpus
 
 import graft.model.Page
+import graft.ops.TextOps
 import graft.text.TextExtract
 import org.apache.spark.sql.{Dataset, SparkSession}
 
@@ -212,12 +213,8 @@ object Corpus {
   def pagesFromDocuments(spark: SparkSession, sfDir: String): Dataset[Page] = {
     import spark.implicits._
     // single-file parquet → one split; fan out so the per-doc analyze/build
-    // work (the KG pipeline's whole cost) uses the cluster, not one core —
-    // conditional, so multi-split inputs at scale are untouched (guide §2.5)
-    val raw = spark.read.parquet(s"$sfDir/documents.parquet")
-    val want = spark.sparkContext.defaultParallelism
-    val df = if (raw.rdd.getNumPartitions * 2 >= want) raw else raw.repartition(want)
-    df
+    // work (the KG pipeline's whole cost) uses the cluster, not one core
+    TextOps.fanOut(spark.read.parquet(s"$sfDir/documents.parquet"))
       .select("doc_id", "text", "lang", "source")
       .as[(Long, String, String, String)]
       .map { case (id, text, lang, source) =>

@@ -10,32 +10,21 @@ import org.apache.spark.sql.functions._
   * 100 TB shape: each round joins the CURRENT FRONTIER (not the visited
   * set) onto the src-keyed edge list — work per round is proportional to
   * the frontier's out-edges, the Pregel shape — then anti-joins visited.
-  * Lineage is truncated per round with the ≤2-live-snapshots
-  * localCheckpoint discipline (Canonicalize's checkpointTracked pattern);
-  * the loop exits early when the frontier empties (one scalar count per
-  * round reaches the driver, nothing else).
+  * Lineage is truncated per round by a [[Snapshot]] that frees the one it
+  * supersedes; the loop exits early when the frontier empties (one scalar
+  * count per round reaches the driver, nothing else).
   */
 object Bfs {
 
   def khop(spark: SparkSession, edges: DataFrame, seed: Column, k: Int,
            srcCol: String = "src", dstCol: String = "dst",
            directed: Boolean = false): DataFrame = {
-    val sc = spark.sparkContext
-    def checkpointTracked(df: DataFrame, eager: Boolean = true): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val out = df.localCheckpoint(eager)
-      (out, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    def free(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-
     val base = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val sym = if (directed) base
       else base.unionAll(base.select(col("dst").as("src"), col("src").as("dst")))
-    val (e, eIds) = checkpointTracked(sym.distinct())
+    val e = Snapshot.take(sym.distinct())
 
-    var (visited, visitedIds) = checkpointTracked(
-      spark.range(1).select(seed.as("node_id"), lit(0L).as("dist")))
+    var visited = Snapshot.take(spark.range(1).select(seed.as("node_id"), lit(0L).as("dist")))
     var frontier = visited
     var d = 0
     var frontierSize = 1L
@@ -49,14 +38,13 @@ object Bfs {
       // (plan truncated immediately) that the frontier count itself
       // materializes; the superseded visited snapshot is freed only AFTER
       // that count, since the lazy snapshot's computation reads it
-      val (union, unionIds) = checkpointTracked(visited.unionAll(next), eager = false)
+      val union = Snapshot.take(visited.unionAll(next), eager = false)
       frontier = union.where(col("dist") === d)
       frontierSize = frontier.count()
-      free(visitedIds)
+      Snapshot.free(visited)
       visited = union
-      visitedIds = unionIds
     }
-    free(eIds) // visited snapshot stays live for the caller
+    Snapshot.free(e)
     visited
   }
 }

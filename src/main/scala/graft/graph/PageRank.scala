@@ -20,26 +20,15 @@ import org.apache.spark.sql.functions._
   * hub-skewed — AQE skew join stays on), plus a 1-row dangling-mass
   * aggregate that is crossJoin-broadcast back (never collected to the
   * driver). Out-degrees are computed once. Lineage is truncated per
-  * iteration with the ≤2-live-snapshots localCheckpoint discipline
-  * (Canonicalize.scala's checkpointTracked pattern).
+  * iteration by a [[Snapshot]] that frees the one it supersedes.
   */
 object PageRank {
 
   def pageRank(spark: SparkSession, edges: DataFrame,
                iters: Int = 10, d: Double = 0.85,
                srcCol: String = "src_id", dstCol: String = "dst_id"): DataFrame = {
-    val sc = spark.sparkContext
-    def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val out = df.localCheckpoint()
-      (out, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    def free(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-
-    val (e, eIds) = checkpointTracked(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    val (nodes, nodeIds) = checkpointTracked(
+    val e = Snapshot.take(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
+    val nodes = Snapshot.take(
       e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct())
     val n = nodes.count() // one scalar, computed once (not per iteration)
     require(n > 0, "pageRank needs a non-empty graph")
@@ -51,10 +40,10 @@ object PageRank {
     // mass (a narrow null-filter aggregate over the materialized snapshot)
     // — two joins fewer per iteration than the previous shape, with the
     // identical per-edge r/odeg terms and row sets.
-    var (ranks, rankIds) = checkpointTracked(
+    var ranks = Snapshot.take(
       nodes.join(outdeg, nodes("id") === outdeg("src"), "left")
         .select(col("id"), col("odeg"), lit(1.0 / n).as("r")))
-    free(nodeIds) // init consumed it; e + ranks carry everything the loop needs
+    Snapshot.free(nodes) // init consumed it; e + ranks carry everything the loop needs
     for (_ <- 1 to iters) {
       // dangling mass: rank sitting on nodes with no out-edges; kept as a
       // 1-row frame and broadcast back — no driver collect in the loop
@@ -65,20 +54,18 @@ object PageRank {
       val inflow = e.join(ranks, e("src") === ranks("id"))
         .groupBy(col("dst").as("id"))
         .agg(sum(col("r") / col("odeg")).as("inflow"))
-      val (next, nextIds) = checkpointTracked(
+      val next = Snapshot.take(
         ranks.select(col("id"), col("odeg")).join(inflow, Seq("id"), "left")
           .crossJoin(broadcast(dang))
           .select(col("id"), col("odeg"),
             (lit((1.0 - d) / n) +
               lit(d) * (coalesce(col("inflow"), lit(0.0)) + col("dm") / n)).as("r")))
-      // localCheckpoint() is eager: `next` is materialized, so the snapshot
-      // it was built from can be freed immediately
-      free(rankIds)
+      // the snapshot is eager: `next` is materialized, so the snapshot it
+      // was built from can be freed immediately
+      Snapshot.free(ranks)
       ranks = next
-      rankIds = nextIds
     }
-    val out = ranks.select(col("id").as("node_id"), round(col("r"), 6).as("rank"))
-    free(eIds) // ranks snapshot stays live for the caller
-    out
+    Snapshot.free(e)
+    ranks.select(col("id").as("node_id"), round(col("r"), 6).as("rank"))
   }
 }

@@ -16,66 +16,54 @@ import org.apache.spark.sql.functions._
   * shape; a full-table relaxation re-scans every settled node every
   * round), followed by one union + min hash aggregate. A path of j edges
   * is applied by round j, so `rounds` rounds exactly cover the <=rounds-
-  * edge path space. Lineage truncated per round with the <=2-live-
-  * snapshots localCheckpoint discipline; the loop exits early when no
-  * distance improves (one scalar count per round).
+  * edge path space. Lineage is truncated per round by a [[Snapshot]] that
+  * frees the one it supersedes; the loop exits early when no distance
+  * improves (one scalar count per round).
   */
 object ShortestPath {
 
   def ssspBounded(spark: SparkSession, edges: DataFrame, seed: Column, rounds: Int,
                   srcCol: String = "src", dstCol: String = "dst", wCol: String = "w",
                   directed: Boolean = false): DataFrame = {
-    val sc = spark.sparkContext
-    def checkpointTracked(df: DataFrame, eager: Boolean = true): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val out = df.localCheckpoint(eager)
-      (out, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    def free(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-
     val base = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
       col(wCol).cast("long").as("w"))
     val sym = if (directed) base
       else base.unionAll(base.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-    val (e, eIds) = checkpointTracked(sym.distinct())
+    val e = Snapshot.take(sym.distinct())
 
-    var (dist, distIds) = checkpointTracked(
-      spark.range(1).select(seed.as("node_id"), lit(0L).as("dist")))
-    var (delta, deltaIds) = (dist, Set.empty[Int])
+    // (node_id, dist, imp): every reached node with its distance, imp =
+    // improved last round (the delta the next round relaxes from)
+    var state = Snapshot.take(
+      spark.range(1).select(seed.as("node_id"), lit(0L).as("dist"), lit(true).as("imp")))
     var r = 0
     var deltaSize = 1L
     while (r < rounds && deltaSize > 0L) {
       r += 1
       // candidate distances from last round's improved nodes, min-folded
       // map-side before the shuffle
+      val delta = state.where(col("imp"))
       val cand = delta.join(e, delta("node_id") === e("src"))
         .select(e("dst").as("node_id"), (delta("dist") + e("w")).as("dist"))
         .groupBy(col("node_id")).agg(min(col("dist")).as("dist"))
-      val old = dist.select(col("node_id").as("o_id"), col("dist").as("o_dist"))
+      val old = state.select(col("node_id").as("o_id"), col("dist").as("o_dist"))
       val improved = cand.join(old, cand("node_id") === old("o_id"), "left")
         .where(col("o_dist").isNull || col("dist") < col("o_dist"))
         .select(col("node_id"), col("dist"))
-      // ONE snapshot AND one job per round: the combined frame carries an
-      // improved-flag column (newDist = every row, newDelta = a narrow
-      // filter over the same snapshot), the snapshot is a LAZY local
-      // checkpoint materialized by the delta count itself, and the
-      // superseded snapshot is freed only AFTER that count (the lazy
+      // ONE snapshot AND one job per round: the next state is a LAZY
+      // snapshot materialized by the delta count itself, and the
+      // superseded state is freed only AFTER that count (the lazy
       // snapshot's computation reads it)
-      val (combined, newIds) = checkpointTracked(
-        dist.join(improved.select(col("node_id").as("i_id")),
-            dist("node_id") === col("i_id"), "left_anti")
+      val next = Snapshot.take(
+        state.join(improved.select(col("node_id").as("i_id")),
+            state("node_id") === col("i_id"), "left_anti")
           .select(col("node_id"), col("dist"), lit(false).as("imp"))
           .unionAll(improved.select(col("node_id"), col("dist"), lit(true).as("imp"))),
         eager = false)
-      delta = combined.where(col("imp")).select(col("node_id"), col("dist"))
-      deltaSize = delta.count()
-      free(distIds); free(deltaIds)
-      dist = combined.select(col("node_id"), col("dist"))
-      distIds = newIds
-      deltaIds = Set.empty
+      deltaSize = next.where(col("imp")).count()
+      Snapshot.free(state)
+      state = next
     }
-    free(eIds); free(deltaIds)
-    dist
+    Snapshot.free(e)
+    state.select(col("node_id"), col("dist"))
   }
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.graph.Snapshot
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -154,11 +155,11 @@ object Similarity {
     // reused iters+1 times — materialize the cast/norm once (skipped when
     // the caller already hands in a materialized unsampled frame)
     val mat =
-      if (materialized && (sampled eq full)) full else sampled.localCheckpoint()
+      if (materialized && (sampled eq full)) full else Snapshot.take(sampled)
     val dims = mat.select(col("nid"), posexplode(col("nemb")).as(Seq("pos", "val")))
     var cents = mat.orderBy(col("nid").asc).limit(centroids)
       .select(col("nid").as("cid"), col("nemb").as("cemb"))
-    for (_ <- 0 until iters) {
+    for (i <- 0 until iters) {
       val c = cents.select(col("cid"), col("cemb"), norm(col("cemb")).as("cnorm"))
       // argmax-by-key via min_by hash aggregate (map-side partial, no sort)
       // — same ordering/tie-break as a (ccos desc, cid asc) row_number
@@ -176,11 +177,16 @@ object Similarity {
       val updated = coords.groupBy(col("cid"))
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("coord")))),
           x => x.getField("coord")).as("cemb"))
-      cents = cents.select(col("cid"), col("cemb").as("prev"))
-        .join(updated, Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("cemb"), col("prev")).as("cemb"))
-        .localCheckpoint() // truncate the per-iteration plan
+      val next = Snapshot.take( // truncate the per-iteration plan
+        cents.select(col("cid"), col("cemb").as("prev"))
+          .join(updated, Seq("cid"), "left")
+          .select(col("cid"), coalesce(col("cemb"), col("prev")).as("cemb")))
+      if (i > 0) Snapshot.free(cents) // the seeds (i = 0) are a plan over mat
+      cents = next
     }
+    // the final centroids are materialized and read nothing else; a mat
+    // handed in by the caller is still the caller's to read
+    if (iters > 0 && (mat ne full)) Snapshot.free(mat)
     cents.select(col("cid"), col("cemb"), norm(col("cemb")).as("cnorm"))
   }
 

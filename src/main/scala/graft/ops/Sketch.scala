@@ -46,7 +46,9 @@ object Sketch {
   /** Per-group HLL distinct estimate of `valueCol`, with the exact distinct
     * count alongside (the exact pass is for small-scale verification — at
     * 100 TB you'd drop it and keep only the sketch).
-    * Output: (group, n_exact, n_registers, hll_estimate).
+    * Output: (group, n_exact, n_registers, hll_estimate). NULL values are
+    * ignored, as by count(DISTINCT): a group whose values are all NULL
+    * reports n_exact = n_registers = 0 and a NULL estimate.
     */
   def hllDistinct(rows: DataFrame, groupCol: String, valueCol: String): DataFrame = {
     // ONE scan of the (possibly expensive — tokenize/explode) input: the
@@ -57,16 +59,17 @@ object Sketch {
     val d = rows.select(col(groupCol).as("grp"), col(valueCol).as("v"))
       .distinct().localCheckpoint()
     val est = estimateRegs(registersFromDistinct(d))
-    val exact = d.groupBy(col("grp")).agg(count(lit(1)).as("n_exact"))
+    val exact = d.groupBy(col("grp")).agg(count(col("v")).as("n_exact"))
     exact.join(est, Seq("grp"), "left")
       .select(col("grp").as(groupCol), col("n_exact"),
         coalesce(col("n_registers"), lit(0L)).as("n_registers"),
         col("hll_estimate"))
   }
 
-  /** (grp, bucket, mx) register rows from DISTINCT (grp, v) pairs. */
+  /** (grp, bucket, mx) register rows from DISTINCT (grp, v) pairs; a NULL
+    * value sets no register. */
   private def registersFromDistinct(d: DataFrame): DataFrame =
-    d.select(col("grp"), md5(col("v")).as("h"))
+    d.where(col("v").isNotNull).select(col("grp"), md5(col("v")).as("h"))
       .select(col("grp"), col("h"),
         conv(substring(col("h"), 1, 2), 16, 10).cast("int").as("bucket"),
         rho(substring(col("h"), 3, 12)).as("rho"))

@@ -1,9 +1,19 @@
 package graft.canon
 
 import graft.SparkSpec
+import graft.graph.{Bfs, PageRank, ShortestPath}
+import graft.ops.Similarity
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.lit
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 
 /** Connected-components canonicalization (J10): correctness vs a brute-force
-  * union-find oracle, hub-skew shapes, and idempotence (north rule).
+  * union-find oracle, hub-skew shapes, and idempotence (north rule). Also
+  * the snapshot discipline CC shares with the other iterative operators:
+  * what each call leaves persisted, and correctness when queries share one
+  * SparkContext.
   */
 class CanonicalizeSpec extends SparkSpec {
 
@@ -81,17 +91,53 @@ class CanonicalizeSpec extends SparkSpec {
     assert(out.forall(_._2 == "n0000"), s"unconverged labels: ${out.filter(_._2 != "n0000").take(5).toSeq}")
   }
 
-  test("CC loop frees superseded edge checkpoints (<=2 live snapshots)") {
+  /** One call of each iterative operator on a seeded 120-node graph (and
+    * 120 embedding vectors for IVF k-means). */
+  private lazy val iterativeOps: Seq[(String, () => DataFrame)] = {
     import spark.implicits._
-    // before the round-3 fix the loop left one cached RDD per round behind
-    val chain = (0 until 30).map(i => (f"c$i%02d", f"c${i + 1}%02d"))
-    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val out = Canonicalize.connectedComponents(spark, chain.toDF("src", "dst"))
-    assert(out.collect().map(_.getString(1)).toSet == Set("c00"))
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
-    // only the FINAL label snapshot may stay cached (plus nothing else: the
-    // symmetrized edge set is explicitly unpersisted)
-    assert(leaked.size <= 2, s"leaked ${leaked.size} cached RDDs: $leaked")
+    val rnd = new scala.util.Random(11)
+    val e = Seq.fill(160)((f"n${rnd.nextInt(120)}%03d", f"n${rnd.nextInt(120)}%03d",
+      1L + rnd.nextInt(9))).toDF("src", "dst", "w")
+    val vecs = (0 until 120).map { i =>
+      (i.toLong, (0 until 8).map(j => (((i * 37 + j * 11) % 19) - 9) * 0.07f))
+    }.toDF("vec_id", "embedding")
+    Seq(
+      "connectedComponents" -> (() => Canonicalize.connectedComponents(spark, e)),
+      "pageRank" -> (() => PageRank.pageRank(spark, e, iters = 5, srcCol = "src", dstCol = "dst")),
+      "khop" -> (() => Bfs.khop(spark, e, lit("n000"), k = 4)),
+      "ssspBounded" -> (() => ShortestPath.ssspBounded(spark, e, lit("n000"), rounds = 4)),
+      "trainIvfCentroids" -> (() => Similarity.trainIvfCentroids(vecs, centroids = 8, iters = 3)))
+  }
+
+  test("CC loop frees superseded edge checkpoints (<=2 live snapshots)") {
+    // every iterative operator frees each snapshot a later one supersedes:
+    // a call leaves exactly one persisted RDD, the snapshot its result reads
+    val sc = spark.sparkContext
+    for ((name, run) <- iterativeOps) {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val out = run()
+      out.collect()
+      val left = sc.getPersistentRDDs.keySet.toSet -- before
+      val behind = out.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet
+      assert(left.size == 1 && left == behind,
+        s"$name left persisted RDDs $left; its result reads $behind")
+    }
+  }
+
+  test("iterative operators match their sequential results when 10 queries share one SparkContext") {
+    // each operator frees only the snapshots it took, so concurrent calls
+    // never free one another's
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    val expected = iterativeOps.map { case (name, run) => name -> rows(run()) }.toMap
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2 * iterativeOps.size)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try for (round <- 1 to 3) {
+      val calls = (iterativeOps ++ iterativeOps).map { case (name, run) =>
+        Future(name -> rows(run()))
+      }
+      for ((name, got) <- Await.result(Future.sequence(calls), 10.minutes))
+        assert(got == expected(name), s"round $round: $name differs from its sequential result")
+    } finally pool.shutdown()
   }
 
   test("canonicalization is idempotent: canon(canon(x)) == canon(x)") {

@@ -65,6 +65,18 @@ class SketchSpec extends SparkSpec {
     assert(again("big") == got("big")._3)
   }
 
+  test("hllDistinct ignores NULL values: in a mixed group and in an all-NULL group") {
+    import spark.implicits._
+    val rows = Seq(("mixed", "a"), ("mixed", null), ("mixed", "b"), ("mixed", null),
+      ("nulls", null), ("nulls", null)).toDF("source", "s")
+    val got = Sketch.hllDistinct(rows, "source", "s").collect().map(r => r.getString(0) -> r).toMap
+    val (rMixed, eMixed) = hllReplay(Seq("a", "b"))
+    val mixed = got("mixed")
+    assert((mixed.getLong(1), mixed.getLong(2), mixed.getDouble(3)) == ((2L, rMixed, eMixed)))
+    val nulls = got("nulls")
+    assert(nulls.getLong(1) == 0L && nulls.getLong(2) == 0L && nulls.isNullAt(3), nulls)
+  }
+
   test("tfidfTopK: smoothed idf, 6dp-rounded before ranking, token-asc tie-break") {
     import spark.implicits._
     val d = Seq((1L, "apple banana apple"), (2L, "banana cherry")).toDF("doc_id", "text")
