@@ -656,9 +656,8 @@ object SparkEntry {
     "q16_neardup_pairs" -> ((s, dir) => NearDup.jaccardPairs(t(s, dir, "documents"), 0.8)),
 
     "q17_lsh_candidates" -> ((s, dir) =>
-      // fused wide-minhash path — same (d1, d2) set as the composed
-      // lshCandidates(lshBands(minhashSignatures(...))) with one shuffle
-      // to signatures instead of two groupBys (r06 optimization)
+      // wide-minhash signatures (one shuffle), narrow band projection,
+      // then one Blocking.pairs bucket aggregation
       NearDup.lshCandidatePairs(t(s, dir, "documents"), k = 8, rowsPerBand = 4)),
 
     // ---------------- KG materialize/query over relational FKs

@@ -13,23 +13,16 @@ object Triangles {
     * two entities mentioned in the same document get an edge; canonical
     * (a < b) orientation, corpus-level distinct.
     *
-    * Plan: per-doc sorted DISTINCT surface set via ONE hash aggregate,
-    * then a NARROW nested-transform pair explosion (the NER extractor caps
-    * mentions at 10/doc, so fan-out is ≤ 45 pairs/doc — bounded by
-    * construction, no quadratic blowup), then one distinct. No self-join
-    * on doc_id: the aggregate+explode shape shuffles each mention row
-    * once instead of twice.
+    * Plan: `Blocking.pairs` keyed on the doc — ONE hash aggregate on doc id,
+    * a narrow pair explosion (the NER extractor caps mentions at 10/doc, so
+    * fan-out is ≤ 45 pairs/doc — bounded by construction, no cap needed),
+    * then one distinct. No self-join on doc_id: the aggregate+explode shape
+    * shuffles each mention row once instead of twice.
     */
   def comentionEdges(mentions: DataFrame,
                      idCol: String = "doc_id", surCol: String = "surface"): DataFrame =
-    mentions
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_set(col(surCol))).as("ms"))
-      .select(explode(flatten(transform(col("ms"), (x, i) =>
-        transform(slice(col("ms"), i + lit(2), size(col("ms"))),
-          y => struct(x.as("a"), y.as("b")))))).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
-      .distinct()
+    graft.ops.Blocking.pairs(mentions, Seq(idCol), struct(col(surCol).as("id")))
+      .select(col("a.id").as("a"), col("b.id").as("b"))
 
   /** Per-node triangle count, degree, and local clustering coefficient
     * 2T/(d(d-1)) over an undirected (a < b, distinct) edge list.

@@ -4,7 +4,6 @@ import graft.analyze.DocAnalyze
 import graft.canon.Canonicalize
 import graft.model._
 import graft.needs.Needs
-import graft.text.PyText
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -223,11 +222,4 @@ object Pipeline {
     rows.unpersist()
     RunResult(canonNodes, edgeRows, tripleRows, metrics, lineage, linkMetrics)
   }
-
-  /** Persisted-id helpers (F8 — graph_extraction_agent.py:510-531). */
-  def persistedNodeId(customerId: String, nodeType: String, content: String): String =
-    "node_" + PyText.sha256Hex(s"$customerId:$nodeType:$content").substring(0, 16)
-
-  def persistedEdgeId(customerId: String, srcId: String, dstId: String, edgeType: String): String =
-    "edge_" + PyText.sha256Hex(s"$customerId:$srcId:$dstId:$edgeType").substring(0, 16)
 }

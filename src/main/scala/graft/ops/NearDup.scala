@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
   * candidate generation, exact n-gram Jaccard verification, and SimHash.
   *
   * Scale design: shingles/minhash/simhash are array Column expressions
-  * (narrow, codegen'd — no shuffle until the candidate join); LSH banding
-  * turns the O(n²) all-pairs problem into an equi-join on (band, signature),
-  * which Spark executes as a shuffled hash join keyed on a 32-char hash —
+  * (narrow, codegen'd — no shuffle until the candidate step); LSH banding
+  * turns the O(n²) all-pairs problem into one bucket aggregation on
+  * (band, signature) (`Blocking.pairs`), keyed on a 32-char hash —
   * uniform keys, no skew. Exact Jaccard runs only on LSH candidates.
   * MinHash uses md5(shingle:seed) so signatures are engine-portable and
   * deterministic (no JVM-specific hashing in results).
@@ -42,7 +42,7 @@ object NearDup {
     * Set semantics via `array_distinct` INSIDE the shingle array, not a
     * row-level `.distinct()`: duplicates only exist within a document, so
     * the per-doc narrow dedup yields exactly the distinct row set with NO
-    * exchange — measured (MinhashProbe, sf0.1, min of 3): signatures 0.72 s
+    * exchange — measured (sf0.1, min of 3): signatures 0.72 s
     * array_distinct vs 0.96 s duplicates-kept vs 1.57 s row-distinct;
     * candidate pipeline equal-or-better. Every consumer (minhash min,
     * Jaccard sizes/intersections, band join) needs set semantics, so this
@@ -95,11 +95,10 @@ object NearDup {
       .agg(min(md5(concat(col("shingle"), lit(":"), col("seed").cast("string")))).as("minhash"))
 
   /** LSH band signatures straight off the wide minhash row — a NARROW
-    * projection + 2-rows-per-doc explode (no second shuffle; the former
-    * lshBands re-grouped the unpivoted signature rows by (doc_id, band) and
-    * re-collected/sorted what the wide row already holds in seed order).
-    * band_sig is byte-identical to lshBands': md5 of the comma-joined
-    * minhashes in seed order. Output: (doc_id, n, band, band_sig).
+    * projection + 2-rows-per-doc explode (no second shuffle: the wide row
+    * already holds the minhashes in seed order). band_sig = md5 of the
+    * comma-joined minhashes of `rowsPerBand` consecutive seeds, in seed
+    * order. Output: (doc_id, n, band, band_sig).
     */
   private def bandsFromWide(wide: DataFrame, k: Int, rowsPerBand: Int): DataFrame = {
     val nBands = (k + rowsPerBand - 1) / rowsPerBand
@@ -112,76 +111,22 @@ object NearDup {
         col("bk.band").as("band"), col("bk.band_sig").as("band_sig"))
   }
 
-  /** LSH bands: group `rowsPerBand` consecutive seeds into one band signature
-    * = md5 of the comma-joined minhashes in seed order.
-    */
-  def lshBands(signatures: DataFrame, rowsPerBand: Int = 4): DataFrame = {
-    signatures
-      .withColumn("band", (col("seed") / rowsPerBand).cast("long"))
-      .groupBy(col("doc_id"), col("band"))
-      .agg(md5(concat_ws(",",
-        transform(array_sort(collect_list(struct(col("seed"), col("minhash")))),
-          x => x.getField("minhash")))).as("band_sig"))
-  }
+  private val bandKey = Seq("band", "band_sig")
 
-  /** Candidate pairs sharing at least one LSH band signature (d1 < d2).
-    *
-    * Implemented as ONE aggregation (bucket members collected per
-    * (band, band_sig), pairs exploded from the sorted member list) rather
-    * than a self-join: a self-join evaluates the whole upstream
-    * minhash/banding pipeline twice (measured ~2× wall), while this shape
-    * computes it once and shuffles each band row exactly once. Bucket
-    * member lists are duplicate-group-sized — tiny unless the corpus
-    * genuinely contains that many near-identical docs (in which case the
-    * pair count itself is quadratic, for any algorithm).
-    */
-  def lshCandidates(bands: DataFrame, maxBucket: Int = Int.MaxValue): DataFrame = {
-    // maxBucket guardrail for 100 TB runs: a bucket of N near-identical docs
-    // yields N²/2 pairs whatever the algorithm — exact dedup (q12) should
-    // remove identical content FIRST; capping bounds the damage if a
-    // mega-cluster slips through. When the cap is set, filter on a cheap
-    // COUNT aggregation (map-side partial) and semi-join BEFORE collecting
-    // members, so mega-bucket lists are never materialized at all —
-    // measured ~8× on a 50k-doc corpus whose duplicate mass is genuinely
-    // quadratic. Default unlimited (oracle-exact) keeps the one-shuffle
-    // collect shape.
-    val pruned =
-      if (maxBucket == Int.MaxValue) bands
-      else {
-        val keep = bands.groupBy(col("band"), col("band_sig"))
-          .agg(count(lit(1)).as("bn"))
-          .where(col("bn") > 1 && col("bn") <= maxBucket)
-          .select(col("band"), col("band_sig"))
-        bands.join(keep, Seq("band", "band_sig"), "left_semi")
-      }
-    val buckets = pruned
-      .groupBy(col("band"), col("band_sig"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .where(size(col("ids")) > 1 && size(col("ids")) <= maxBucket)
-    buckets
-      .select(explode(flatten(transform(col("ids"), (x, i) =>
-        transform(slice(col("ids"), i + lit(2), size(col("ids"))),
-          y => struct(x.as("d1"), y.as("d2")))))).as("p"))
-      .select(col("p.d1").as("d1"), col("p.d2").as("d2"))
-      .distinct()
-  }
-
-  /** Fused docs→LSH-candidate-pairs path: identical (d1, d2) set to
-    * `lshCandidates(lshBands(minhashSignatures(docs, k), rowsPerBand))`
-    * via the wide minhash aggregation — one shuffle to signatures and a
-    * narrow band projection instead of the two groupBys the composed form
-    * pays (that form remains for callers holding signature/band tables).
+  /** Candidate pairs sharing at least one LSH band signature (d1 < d2):
+    * the wide minhash aggregation (one shuffle to signatures), a narrow
+    * band projection, then one `Blocking.pairs` bucket aggregation.
     */
   def lshCandidatePairs(docs: DataFrame, k: Int = 8, rowsPerBand: Int = 4,
                         maxBucket: Int = Int.MaxValue,
                         idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    candidatesWithSizes(
+    Blocking.pairs(
       bandsFromWide(minhashWide(shingleRows(docs, idCol, textCol), k), k, rowsPerBand),
-      maxBucket)
-      .select("d1", "d2")
+      bandKey, struct(col("doc_id").as("id")), maxBucket)
+      .select(col("a.id").as("d1"), col("b.id").as("d2"))
 
   /** Exact shingle-set Jaccard over all pairs sharing ≥1 shingle (suitable
-    * below ~10⁶ docs; at scale restrict to `lshCandidates` first).
+    * below ~10⁶ docs; at scale restrict to `lshCandidatePairs` first).
     */
   def jaccardPairs(docs: DataFrame, threshold: Double,
                    idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
@@ -263,7 +208,7 @@ object NearDup {
     val req = floor((col("n") * num + (den - 1)) / den).cast("long")
     // materialized once: the prefix×prefix self-join below reads BOTH sides
     // from this table — without the snapshot the whole df-join + per-doc
-    // collect/sort chain is evaluated twice (the lshCandidates lesson; the
+    // collect/sort chain is evaluated twice (see `Blocking.pairs`; the
     // self-join itself is kept because the positional filter needs p from
     // both sides and prefix buckets of ubiquitous grams must stay under
     // AQE's skew-join splitting, not in collected lists)
@@ -303,47 +248,8 @@ object NearDup {
     */
   def lshVerifiedPairs(docs: DataFrame, threshold: Double, k: Int = 8, rowsPerBand: Int = 4,
                        maxBucket: Int = Int.MaxValue,
-                       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    // ONE tokenize/shingle scan over the corpus, materialized once: the
-    // deduped set feeds the wide minhash aggregation (min is duplicate-
-    // insensitive so the distinct set is equivalent) and both verification
-    // joins; the wide row's count column carries the shingle-set sizes all
-    // the way through the candidate pairs, so verification needs no size
-    // aggregation or joins at all.
-    val ds = shingleRows(docs, idCol, textCol)
-      .localCheckpoint()
-    val cands = candidatesWithSizes(bandsFromWide(minhashWide(ds, k), rowsPerBand = rowsPerBand, k = k), maxBucket)
-    verifyJaccardSized(ds, cands, threshold)
-  }
-
-  /** Candidate pairs from (doc_id, n, band, band_sig) rows with both docs'
-    * shingle-set sizes carried — the same ONE-aggregation bucket-collect
-    * shape as `lshCandidates` (identical (d1, d2) pair set: sort_array on
-    * struct(doc_id, n) orders by the unique doc_id exactly like the
-    * id-only list). Output: (d1, d2, n1, n2), d1 < d2, distinct.
-    */
-  private def candidatesWithSizes(bands: DataFrame, maxBucket: Int): DataFrame = {
-    val pruned =
-      if (maxBucket == Int.MaxValue) bands
-      else {
-        val keep = bands.groupBy(col("band"), col("band_sig"))
-          .agg(count(lit(1)).as("bn"))
-          .where(col("bn") > 1 && col("bn") <= maxBucket)
-          .select(col("band"), col("band_sig"))
-        bands.join(keep, Seq("band", "band_sig"), "left_semi")
-      }
-    pruned
-      .groupBy(col("band"), col("band_sig"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("n")))).as("ms"))
-      .where(size(col("ms")) > 1 && size(col("ms")) <= maxBucket)
-      .select(explode(flatten(transform(col("ms"), (x, i) =>
-        transform(slice(col("ms"), i + lit(2), size(col("ms"))),
-          y => struct(x.getField("doc_id").as("d1"), y.getField("doc_id").as("d2"),
-            x.getField("n").as("n1"), y.getField("n").as("n2")))))).as("p"))
-      .select(col("p.d1").as("d1"), col("p.d2").as("d2"),
-        col("p.n1").as("n1"), col("p.n2").as("n2"))
-      .distinct()
-  }
+                       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    lshVerifiedPairsScaled(docs, threshold, k, rowsPerBand, maxBucket, idCol, textCol).pairs
 
   /** Exact-Jaccard verification of size-carrying candidate pairs against
     * precomputed (doc_id, shingle) rows. Equi-join keys (d1) then
@@ -375,7 +281,8 @@ object NearDup {
     * dedup first if the corpus has mass duplicates, same discipline as the
     * LSH families). Verification is one codegen'd zip_with over
     * pre-materialized char arrays (no-CSE discipline).
-    * Output: (d1, d2, hamming) with d1 < d2 and hamming <= 1.
+    * Output: (d1, d2, hamming) with d1 < d2 and hamming <= 1; rows that
+    * share an id never pair with each other.
     */
   def hammingJoin(rows: DataFrame, idCol: String, nameCol: String,
                   maxLen: Int = 64): DataFrame = {
@@ -389,24 +296,11 @@ object NearDup {
         concat_ws("|", length(col("name")).cast("string"), col("i").cast("string"),
           col("name").substr(lit(1), col("i") - 1),
           col("name").substr(col("i") + 1, lit(maxLen))).as("mkey"))
-    // ONE bucket-collect aggregation instead of a self-join on mkey: the
-    // self-join evaluated the whole mask-explode pipeline twice (the
-    // lshCandidates lesson); sort_array on struct(id, name) orders by the
-    // unique id, so the exploded (d1 < d2) pair set is identical.
-    val cand = keyed
-      .groupBy(col("mkey"))
-      .agg(sort_array(collect_list(struct(col("id"), col("name")))).as("ms"))
-      .where(size(col("ms")) > 1)
-      .select(explode(flatten(transform(col("ms"), (x, i) =>
-        transform(slice(col("ms"), i + lit(2), size(col("ms"))),
-          y => struct(x.getField("id").as("d1"), y.getField("id").as("d2"),
-            x.getField("name").as("n1"), y.getField("name").as("n2")))))).as("p"))
-      .select(col("p.d1").as("d1"), col("p.d2").as("d2"),
-        col("p.n1").as("n1"), col("p.n2").as("n2"))
-      .distinct()
+    val cand = Blocking.pairs(keyed, Seq("mkey"), struct(col("id"), col("name")))
     // exact verify over materialized char arrays (lambdas get no CSE)
     cand
-      .select(col("d1"), col("d2"), split(col("n1"), "").as("c1"), split(col("n2"), "").as("c2"))
+      .select(col("a.id").as("d1"), col("b.id").as("d2"),
+        split(col("a.name"), "").as("c1"), split(col("b.name"), "").as("c2"))
       .select(col("d1"), col("d2"),
         size(filter(zip_with(col("c1"), col("c2"), (x, y) => x =!= y), b => b))
           .cast("long").as("hamming"))
@@ -451,16 +345,6 @@ object NearDup {
       .select("new_id", "old_id", "jaccard")
   }
 
-  /** Buckets the `maxBucket` guardrail would prune: one cheap COUNT
-    * aggregation per (band, band_sig) — map-side partial, member lists never
-    * collected. Exactly the buckets `lshCandidates(_, maxBucket)` drops.
-    * Output: (band, band_sig, bucket_size) with bucket_size > maxBucket.
-    */
-  def lshOverflowBuckets(bands: DataFrame, maxBucket: Int): DataFrame =
-    bands.groupBy(col("band"), col("band_sig"))
-      .agg(count(lit(1)).as("bucket_size"))
-      .where(col("bucket_size") > maxBucket)
-
   /** Scale-entrypoint result: verified pairs plus the ACCOUNTED drops (no
     * silent caps — every pruned bucket is visible with its size).
     */
@@ -489,25 +373,35 @@ object NearDup {
     * summary. A bucket of N near-identical docs yields N²/2 pairs under ANY
     * algorithm, so the right fix for overflow is exact dedup (q12) first —
     * this entry makes that failure loud instead of letting a mega-cluster
-    * take the job down. The unlimited `lshVerifiedPairs` stays as the
-    * oracle-exact form. Both frames share one checkpointed shingle scan AND
-    * one checkpointed band table (pairs, droppedBuckets and logDrops() all
-    * read it), so construction launches the shingle/minhash jobs eagerly —
-    * the right trade for an entrypoint whose outputs are always actioned.
+    * take the job down. The unlimited `lshVerifiedPairs` is this entry's
+    * `.pairs` at `Int.MaxValue`, the oracle-exact form. All frames share one
+    * checkpointed shingle scan, and when capped one checkpointed band table
+    * (pairs, droppedBuckets and logDrops() all read it), so construction
+    * launches the shingle/minhash jobs eagerly — the right trade for an
+    * entrypoint whose outputs are always actioned. Drops are
+    * `Blocking.overflow` over that band table: (band, band_sig, bucket_size).
     */
   def lshVerifiedPairsScaled(docs: DataFrame, threshold: Double, k: Int = 8, rowsPerBand: Int = 4,
                              maxBucket: Int = 1024,
                              idCol: String = "doc_id", textCol: String = "text"): ScaledNearDup = {
+    // ONE tokenize/shingle scan over the corpus, materialized once: the
+    // deduped set feeds the wide minhash aggregation (min is duplicate-
+    // insensitive so the distinct set is equivalent) and both verification
+    // joins; the wide row's count column carries the shingle-set sizes all
+    // the way through the candidate pairs, so verification needs no size
+    // aggregation or joins at all.
     val ds = shingleRows(docs, idCol, textCol)
       .localCheckpoint()
-    // band rows are read three times (count-filter, bucket collection, drop
-    // accounting) — materialize them once; docs×(k/rowsPerBand) small rows
-    // (n rides along so verification needs no size joins)
-    val bands = bandsFromWide(minhashWide(ds, k), k, rowsPerBand)
-      .localCheckpoint()
+    // capped, band rows are read three times (count-filter, bucket
+    // collection, drop accounting) — materialize them once; docs×(k/rowsPerBand)
+    // small rows. Uncapped, only the bucket collection reads them.
+    val wideBands = bandsFromWide(minhashWide(ds, k), k, rowsPerBand)
+    val bands = if (maxBucket == Int.MaxValue) wideBands else wideBands.localCheckpoint()
+    val cands = Blocking.pairs(bands, bandKey, struct(col("doc_id").as("id"), col("n")), maxBucket)
+      .select(col("a.id").as("d1"), col("b.id").as("d2"), col("a.n").as("n1"), col("b.n").as("n2"))
     ScaledNearDup(
-      pairs = verifyJaccardSized(ds, candidatesWithSizes(bands, maxBucket), threshold),
-      droppedBuckets = lshOverflowBuckets(bands, maxBucket))
+      pairs = verifyJaccardSized(ds, cands, threshold),
+      droppedBuckets = Blocking.overflow(bands, bandKey, maxBucket))
   }
 
   /** 64-bit SimHash over whitespace tokens: per bit, majority vote of token
@@ -596,11 +490,11 @@ object NearDup {
 
   /** SimHash-banded near-dup (the third dedup family, complementing exact
     * dedup and MinHash LSH): 4×16-bit bands of the md5 simhash → candidate
-    * pairs sharing a band (the same single-bucket-aggregation shape as
-    * `lshCandidates`, no self-join) → `hamming(simhash) <= maxHamming`
-    * verification. By pigeonhole every pair at distance <= 3 shares one of
-    * the 4 bands, so recall is exact below 4 and decays above; pairs at
-    * larger distance survive only when their differing bits cluster.
+    * pairs sharing a band (`Blocking.pairs`, no self-join) →
+    * `hamming(simhash) <= maxHamming` verification. By pigeonhole every
+    * pair at distance <= 3 shares one of the 4 bands, so recall is exact
+    * below 4 and decays above; pairs at larger distance survive only when
+    * their differing bits cluster.
     * Scale shape: ONE narrow simhash pass (one md5 per token, no shingle
     * explode), one shuffle on (band, 16-bit value), tiny verified pair set —
     * cheaper than MinHash when token-level (not phrase-level) similarity is
@@ -625,20 +519,11 @@ object NearDup {
     val bands = sims.select(col("doc_id"), col("sim"),
       explode(array(bandCols: _*)).as("bk"))
       .select(col("doc_id"), col("sim"), col("bk.band").as("band"), col("bk.band_val").as("band_val"))
-    val buckets = bands
-      .groupBy(col("band"), col("band_val"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("sim")))).as("ms"))
-      // same quadratic-bucket guardrail as lshCandidates: exact-dedup first
-      // at scale; identical texts share all 4 bands
-      .where(size(col("ms")) > 1 && size(col("ms")) <= maxBucket)
-    buckets
-      .select(explode(flatten(transform(col("ms"), (x, i) =>
-        transform(slice(col("ms"), i + lit(2), size(col("ms"))),
-          y => struct(x.getField("doc_id").as("d1"), y.getField("doc_id").as("d2"),
-            x.getField("sim").as("s1"), y.getField("sim").as("s2")))))).as("p"))
-      .select(col("p.d1").as("d1"), col("p.d2").as("d2"),
-        hamming(col("p.s1"), col("p.s2")).cast("long").as("hamming"))
-      .distinct()
+    // identical texts share all 4 bands, so `maxBucket` is the same
+    // quadratic-bucket guardrail as the MinHash family: exact-dedup first
+    Blocking.pairs(bands, Seq("band", "band_val"), struct(col("doc_id").as("id"), col("sim")), maxBucket)
+      .select(col("a.id").as("d1"), col("b.id").as("d2"),
+        hamming(col("a.sim"), col("b.sim")).cast("long").as("hamming"))
       .where(col("hamming") <= maxHamming)
   }
 

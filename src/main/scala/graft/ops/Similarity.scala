@@ -294,7 +294,7 @@ object Similarity {
   /** Embedding-cosine near-dup pairs — the 5th dedup family (exact hash,
     * MinHash LSH, SimHash bands, n-gram Jaccard, and now embedding cosine):
     * sign-hyperplane LSH candidate generation over ALL vectors (the same
-    * single-bucket-aggregation + pair-explode shape as NearDup.lshCandidates
+    * `Blocking.pairs` bucket aggregation as the text families
     * — ids only, embeddings joined back afterwards, so bucket lists never
     * carry arrays), then exact cosine verification >= `threshold` (rounded
     * 6dp, engine-portable). Candidate recall follows the multi-table LSH
@@ -309,16 +309,6 @@ object Similarity {
     cosineNearDupPairsScaled(embeddings, threshold, planes, tables, idCol, embCol,
       dim, maxBucket).pairs
 
-  /** Over-cap (table, bucket) groups the guardrail prunes — one cheap COUNT
-    * aggregation (map-side partial, member lists never collected), the
-    * embedding-family analog of `NearDup.lshOverflowBuckets`. Output:
-    * (t, bucket, bucket_size) with bucket_size > maxBucket.
-    */
-  def cosineOverflowBuckets(bucketRows: DataFrame, maxBucket: Int): DataFrame =
-    bucketRows.groupBy(col("bucket.t").cast("long").as("t"), col("bucket.b").as("bucket"))
-      .agg(count(lit(1)).as("bucket_size"))
-      .where(col("bucket_size") > maxBucket)
-
   /** The ACCOUNTED form of `cosineNearDupPairs` (the no-silent-caps contract
     * the text families already honor): `.pairs` is identical to
     * `cosineNearDupPairs` at the same cap, and `.droppedBuckets` lists every
@@ -327,7 +317,8 @@ object Similarity {
     * bucket of N near-identical vectors yields N²/2 pairs under ANY
     * algorithm; the right fix for overflow is exact dedup first, and this
     * entry makes that failure loud. Both frames share one checkpointed
-    * embedding scan and (when capped) one checkpointed bucket table.
+    * embedding scan and (when capped) one checkpointed bucket table; drops
+    * are `Blocking.overflow` over it: (t, bucket, bucket_size).
     *
     * Dim contract enforced IN the plan (same raise_error as lshTopK): a
     * vector whose length disagrees with the hyperplane length would silently
@@ -364,10 +355,11 @@ object Similarity {
     // it ran ~20× slower than under an aggregation (measured 1.3 s vs
     // 0.07 s on q44's bucket pass at sf0.1). Here each row computes ONE
     // small codegen'd dot; the 48× row inflation is map-local — the
-    // partial sum collapses it to `tables` rows per vector before the
+    // partial aggregate collapses it to `tables` rows per vector before the
     // exchange. Values are bit-identical: the dot fold order matches the
-    // old expression and the bit-sum over disjoint bitvals equals the old
-    // when-chain reduce.
+    // old expression and the bit_or over disjoint bitvals equals the old
+    // when-chain reduce. `bit_or`, not `sum`: the two agree for one row per
+    // id, and rows sharing an id and an embedding then hash like one row.
     val planeRows: Seq[(Int, Long, Seq[Double])] =
       for { t <- 0 until tables; j <- 0 until planes }
         yield (t, 1L << j, hyperplane(dimension, t * planes + j).toSeq)
@@ -377,42 +369,21 @@ object Similarity {
     val bucketRows = checked.select(col("nid"), col("nemb"))
       .crossJoin(broadcast(planesDf))
       .groupBy(col("nid"), col("t"))
-      .agg(sum(when(dot(col("nemb"), col("plane")) > 0, col("bitval")).otherwise(lit(0L))).as("b"))
-      .select(col("nid"), struct(col("t").as("t"), col("b").as("b")).as("bucket"))
-    // same cap discipline as NearDup.lshCandidates: when the guardrail is
-    // set, a cheap COUNT + semi-join prunes mega-buckets BEFORE any member
-    // list is collected — and the SAME checkpointed bucket table feeds the
-    // drop accounting, so pairs and droppedBuckets always agree
-    val (pruned, dropped) =
-      if (maxBucket == Int.MaxValue)
-        (bucketRows, cosineOverflowBuckets(bucketRows.limit(0), maxBucket))
-      else {
-        val rows = bucketRows.localCheckpoint()
-        val keep = rows.groupBy(col("bucket")).agg(count(lit(1)).as("bn"))
-          .where(col("bn") > 1 && col("bn") <= maxBucket)
-          .select(col("bucket"))
-        (rows.join(keep, Seq("bucket"), "left_semi"), cosineOverflowBuckets(rows, maxBucket))
-      }
-    // pair explosion as TWO chained generates, not one nested transform:
-    // the nested form materializes the full k²/2-struct array per bucket
-    // row before exploding (≈131k structs for a 512-member bucket); the
-    // chained form emits one ≤k slice per first-level row. Same (d1 < d2)
-    // pair set — the member list is ascending, so the post-i slice holds
-    // exactly the larger partners.
-    val cand = pruned
-      .groupBy(col("bucket"))
-      .agg(sort_array(collect_list(col("nid"))).as("ids"))
-      .where(size(col("ids")) > 1 && size(col("ids")) <= maxBucket)
-      .select(col("ids"), posexplode(col("ids")).as(Seq("i", "d1")))
-      .select(col("d1"),
-        explode(slice(col("ids"), col("i") + lit(2), size(col("ids")))).as("d2"))
-      .distinct()
+      .agg(bit_or(when(dot(col("nemb"), col("plane")) > 0, col("bitval")).otherwise(lit(0L))).as("bucket"))
+      .select(col("nid"), col("t").cast("long").as("t"), col("bucket"))
+    // capped, the SAME checkpointed bucket table feeds the pair prune and
+    // the drop accounting, so pairs and droppedBuckets always agree
+    val rows = if (maxBucket == Int.MaxValue) bucketRows else bucketRows.localCheckpoint()
+    val bucketKey = Seq("t", "bucket")
+    val cand = Blocking.pairs(rows, bucketKey, struct(col("nid").as("id")), maxBucket)
+      .select(col("a.id").as("d1"), col("b.id").as("d2"))
     val pairs = cand
       .join(mat.select(col("nid").as("d1"), col("nemb").as("e1"), col("nnorm").as("m1")), Seq("d1"))
       .join(mat.select(col("nid").as("d2"), col("nemb").as("e2"), col("nnorm").as("m2")), Seq("d2"))
       .select(col("d1"), col("d2"), round(dot(col("e1"), col("e2")) / (col("m1") * col("m2")), 6).as("cos_sim"))
       .where(col("cos_sim") >= threshold)
-    NearDup.ScaledNearDup(pairs, dropped, label = "cosineNearDupPairsScaled")
+    NearDup.ScaledNearDup(pairs, Blocking.overflow(rows, bucketKey, maxBucket),
+      label = "cosineNearDupPairsScaled")
   }
 
   /** @param dim embedding dimensionality (hyperplanes are literal arrays of

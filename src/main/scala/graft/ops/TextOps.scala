@@ -430,7 +430,7 @@ object TextOps {
     * spans, boilerplate fraction.
     *
     * 100 TB shape: per-doc-distinct spans via `array_distinct` INSIDE the
-    * array (zero exchange — the measured MinhashProbe discipline), one
+    * array (zero exchange — the measured `NearDup.shingleRows` discipline), one
     * groupBy on (group, span) with uniform keys, the per-group doc-count
     * dimension broadcast (#groups ≪ corpus), one per-doc aggregation.
     */

@@ -75,8 +75,7 @@ object DataScaleProbe {
         }
       }
       record("exact_dedup")(TextOps.exactDedup(docs).count())
-      record("lsh_candidates")(NearDup.lshCandidates(
-        NearDup.lshBands(NearDup.minhashSignatures(canonical)), maxBucket = 64).count())
+      record("lsh_candidates")(NearDup.lshCandidatePairs(canonical, maxBucket = 64).count())
       if (enabled("lsh_verified")) {
         // construction guarded too: lshVerifiedPairsScaled localCheckpoints eagerly
         val scaled = NearDup.lshVerifiedPairsScaled(canonical, 0.8, maxBucket = 64)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.ops.Similarity
+import graft.ops.{Blocking, Similarity}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -122,44 +122,8 @@ object EmbedStageProbe {
           Similarity.lshBucket(col("nemb"), 64, 12, t).as(s"b$t"))): _*)
         .write.format("noop").mode("overwrite").save(); 0L
     }
-    val rowsNo = mat.select(col("nid"), explode(array(bucketCols: _*)).as("bucket"))
-    time("keep+collect+nockpt") {
-      val keep = rowsNo.groupBy(col("bucket")).agg(count(lit(1)).as("bn"))
-        .where(col("bn") > 1 && col("bn") <= 512).select(col("bucket"))
-      rowsNo.join(keep, Seq("bucket"), "left_semi")
-        .groupBy(col("bucket"))
-        .agg(sort_array(collect_list(col("nid"))).as("ids"))
-        .where(size(col("ids")) > 1 && size(col("ids")) <= 512)
-        .select(explode(flatten(transform(col("ids"), (x, i) =>
-          transform(slice(col("ids"), i + lit(2), size(col("ids"))),
-            y => struct(x.as("d1"), y.as("d2")))))).as("p"))
-        .select(col("p.d1").as("d1"), col("p.d2").as("d2"))
-        .distinct().count()
-    }
-    time("cand_chained") {
-      val keep = rows.groupBy(col("bucket")).agg(count(lit(1)).as("bn"))
-        .where(col("bn") > 1 && col("bn") <= 512).select(col("bucket"))
-      rows.join(keep, Seq("bucket"), "left_semi")
-        .groupBy(col("bucket"))
-        .agg(sort_array(collect_list(col("nid"))).as("ids"))
-        .where(size(col("ids")) > 1 && size(col("ids")) <= 512)
-        .select(col("ids"), posexplode(col("ids")).as(Seq("i", "d1")))
-        .select(col("d1"),
-          explode(slice(col("ids"), col("i") + lit(2), size(col("ids")))).as("d2"))
-        .distinct().count()
-    }
-    time("keep+collect+distinct") {
-      val keep = rows.groupBy(col("bucket")).agg(count(lit(1)).as("bn"))
-        .where(col("bn") > 1 && col("bn") <= 512).select(col("bucket"))
-      rows.join(keep, Seq("bucket"), "left_semi")
-        .groupBy(col("bucket"))
-        .agg(sort_array(collect_list(col("nid"))).as("ids"))
-        .where(size(col("ids")) > 1 && size(col("ids")) <= 512)
-        .select(explode(flatten(transform(col("ids"), (x, i) =>
-          transform(slice(col("ids"), i + lit(2), size(col("ids"))),
-            y => struct(x.as("d1"), y.as("d2")))))).as("p"))
-        .select(col("p.d1").as("d1"), col("p.d2").as("d2"))
-        .distinct().count()
+    time("candidates") {
+      Blocking.pairs(rows, Seq("bucket"), struct(col("nid").as("id")), maxBucket = 512).count()
     }
     spark.stop()
   }

@@ -42,8 +42,7 @@ object NearDupScale {
       println(f"$name%-22s ${(System.nanoTime() - t0) / 1e9}%7.2f s  rows=$r")
     }
     time("minhash")(NearDup.minhashSignatures(docs).count())
-    time("lsh_candidates")(NearDup.lshCandidates(
-      NearDup.lshBands(NearDup.minhashSignatures(docs)), maxBucket).count())
+    time("lsh_candidates")(NearDup.lshCandidatePairs(docs, maxBucket = maxBucket).count())
     time("lsh_verified")(NearDup.lshVerifiedPairs(docs, 0.8, maxBucket = maxBucket).count())
     spark.stop()
   }

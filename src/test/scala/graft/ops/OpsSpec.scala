@@ -217,7 +217,7 @@ class OpsSpec extends SparkSpec {
     val jac = NearDup.jaccardPairs(d, 0.8).collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(jac.length == 1 && jac(0)._1 == 1L && jac(0)._2 == 2L)
     assert(math.abs(jac(0)._3 - 37.0 / 39.0) < 1e-4) // 38∩? shingles: 37 common of 38+38
-    val cands = NearDup.lshCandidates(NearDup.lshBands(NearDup.minhashSignatures(d, 8), 4))
+    val cands = NearDup.lshCandidatePairs(d, 8, 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // near-dup pair should be a candidate via at least one band (high prob at jac 0.95)
     assert(cands.contains((1L, 2L)))
@@ -461,6 +461,17 @@ class OpsSpec extends SparkSpec {
       idCol = "doc_id", embCol = "emb", dim = 64)
     assert(unlimited.pairs.count() == 66L + 1L)
     assert(unlimited.logDrops() == ((0L, 0L)) && unlimited.droppedBuckets.isEmpty)
+  }
+
+  test("cosineNearDupPairs: a duplicated id pairs with its identical partner, no self-pair") {
+    import spark.implicits._
+    val v = Array.tabulate(64)(i => math.sin(i + 1.0))
+    val far = v.map(-_)
+    val emb = Seq((1L, v), (1L, v), (2L, v), (3L, far)).toDF("doc_id", "emb")
+    val got = Similarity.cosineNearDupPairs(emb, 0.9, idCol = "doc_id", embCol = "emb", dim = 64)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(got.toSet == Set((1L, 2L)), s"got ${got.toSeq}")
+    assert(got.forall { case (a, b) => a < b })
   }
 
   test("cosineNearDupPairs fails loudly on an embedding-dimension mismatch") {
@@ -1184,6 +1195,14 @@ class OpsSpec extends SparkSpec {
     val got = NearDup.hammingJoin(rows, "c_custkey", "c_name").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == Set((1L, 2L, 1L), (1L, 3L, 0L), (2L, 3L, 1L), (5L, 6L, 1L)))
+  }
+
+  test("hammingJoin: duplicate ids emit no d1 = d2 self-pairs") {
+    import spark.implicits._
+    val rows = Seq((1L, "abcdef"), (1L, "abcdex"), (2L, "abcdef")).toDF("c_custkey", "c_name")
+    val got = NearDup.hammingJoin(rows, "c_custkey", "c_name").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(got == Set((1L, 2L, 0L), (1L, 2L, 1L)), s"got $got")
   }
 
   test("mergeIntervals: overlap and touch merge, gaps split, counts right") {
